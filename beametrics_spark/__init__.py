@@ -18,7 +18,8 @@ Layout:
                   (reference: beametrics/metrics.py, pipeline.py:188-208)
     pipeline    — parse → fan-out → window → aggregate plan builder
                   (reference: beametrics/pipeline.py:164-186)
-    sinks       — sink registry: local/console/memory/parquet/monitoring-stub
+    sinks       — sink registry (the only list of export types), file and
+                  monitoring sinks, config-to-sink wiring
                   (reference: beametrics/metrics_exporter.py)
     sources     — batch/stream source registry (reference: main.py:313)
     streaming   — streaming query runner with watermark/trigger/checkpoint

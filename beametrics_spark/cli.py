@@ -21,11 +21,11 @@ import sys
 
 from beametrics_spark.config import (
     DEFAULT_CLI_WINDOW_SIZE,
-    VALID_EXPORT_TYPES,
     load_metric_configs,
     normalize_window_size,
     parse_filter_conditions,
 )
+from beametrics_spark.sinks import SINK_REGISTRY
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -51,7 +51,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--metric-field", default=None)
     # windowing / export (reference main.py:77-102)
     p.add_argument("--window-size", default=DEFAULT_CLI_WINDOW_SIZE, type=str)
-    p.add_argument("--export-type", default="local")
+    p.add_argument("--export-type", default="local", help="|".join(SINK_REGISTRY))
     p.add_argument("--project-id", default=None)
     p.add_argument("--metrics", default=None, help="JSON array of metric configs")
     p.add_argument("--config", default=None, help="YAML config path")
@@ -101,17 +101,10 @@ def build_parser() -> argparse.ArgumentParser:
 
 def validate_args(args: argparse.Namespace) -> None:
     """Reference validation rules (main.py:104-139, metrics.py:24-32)."""
-    if args.export_type not in VALID_EXPORT_TYPES + (
-        "console",
-        "memory",
-        "parquet",
-        "json",
-        "csv",
-        "orc",
-        "idempotent-parquet",
-        "google-cloud-monitoring-executor",
-    ):
+    if args.export_type not in SINK_REGISTRY:
         raise ValueError(f"Unsupported export type: {args.export_type}")
+    if args.salt_buckets is not None and not args.batch:
+        raise ValueError("--salt-buckets applies to --batch runs only")
     if args.metric_type not in ("count", "sum"):
         raise ValueError(f"Unsupported metric type: {args.metric_type}")
     if args.metric_type == "sum" and not args.metric_field and not (args.config or args.metrics):
@@ -218,23 +211,13 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import types as T
 
     from beametrics_spark.session import get_spark
-    from beametrics_spark.sinks import create_sink
+    from beametrics_spark.sinks import route_by_metric, sinks_for_configs
     from beametrics_spark.sources import read_parquet, stream_source
     from beametrics_spark.streaming import parse_events, run_metrics_stream
     from beametrics_spark.pipeline import build_metrics_pipeline
 
     spark = get_spark("beametrics-cli")
-
-    sinks = {}
-    for i, cfg in enumerate(configs):
-        kwargs = {}
-        if cfg.exporter.export_type.startswith("google-cloud-monitoring"):
-            kwargs["project_id"] = cfg.exporter.project_id or ""
-        elif cfg.exporter.export_type in (
-            "parquet", "json", "csv", "orc", "idempotent-parquet"
-        ):
-            kwargs["path"] = cfg.exporter.options.get("path", f"/tmp/beametrics_out_{i}")
-        sinks[i] = create_sink(cfg.exporter.export_type, **kwargs)
+    sinks = sinks_for_configs(configs)
 
     if args.batch:
         events = read_parquet(spark, args.source_path)
@@ -244,8 +227,6 @@ def main(argv: list[str] | None = None) -> int:
             ts_col=args.ts_field,
             salt_buckets=args.salt_buckets,
         )
-        from beametrics_spark.sinks import route_by_metric
-
         route_by_metric(sinks)(out, 0)
         return 0
 

@@ -27,11 +27,11 @@ try:  # yaml is in the base image via pyspark deps; gate anyway
 except ImportError:  # pragma: no cover
     yaml = None
 
+from beametrics_spark.sinks import SINK_REGISTRY
+
 DEFAULT_WINDOW_SIZE = 60  # seconds; reference pipeline.py:29
 DEFAULT_CLI_WINDOW_SIZE = 120  # reference main.py:77-79
 
-VALID_OPERATORS = ("equals", "contains", "greater_than", "less_than")
-VALID_EXPORT_TYPES = ("google-cloud-monitoring", "local")
 MONITORING_METRIC_PREFIX = "custom.googleapis.com/"  # reference main.py:228-232
 
 
@@ -49,13 +49,6 @@ class FilterCondition:
     field: str
     value: Any
     operator: str
-
-    def __post_init__(self) -> None:
-        if self.operator not in VALID_OPERATORS:
-            # The reference defers this to match-time (unknown op ⇒ no match,
-            # filter.py:42). We keep that runtime behavior in filters.py but
-            # also surface an early warning-free construction path.
-            pass
 
     @classmethod
     def from_dict(cls, d: dict[str, Any]) -> "FilterCondition":
@@ -98,23 +91,18 @@ class MetricDefinition:
 
 @dataclass
 class ExporterConfig:
-    """Where aggregates go. Reference beametrics/metrics_exporter.py:36-62,176-183."""
+    """Where aggregates go. Reference beametrics/metrics_exporter.py:36-62,176-183.
+
+    ``export_type`` is a key of sinks.SINK_REGISTRY; sinks.sinks_for_configs
+    turns this into a sink.
+    """
 
     export_type: str = "local"
-    project_id: str | None = None  # monitoring sink only
-    options: dict[str, Any] = field(default_factory=dict)
+    project_id: str | None = None  # monitoring sinks only
+    path: str | None = None  # file sinks only
 
     def __post_init__(self) -> None:
-        if self.export_type not in VALID_EXPORT_TYPES and self.export_type not in (
-            "console",
-            "memory",
-            "parquet",
-            "json",
-            "csv",
-            "orc",
-            "idempotent-parquet",
-            "google-cloud-monitoring-executor",
-        ):
+        if self.export_type not in SINK_REGISTRY:
             raise ValueError(f"Unsupported export type: {self.export_type}")
 
 
@@ -159,10 +147,6 @@ def normalize_window_size(value: Any, default: int = DEFAULT_WINDOW_SIZE) -> int
         return default
     if isinstance(value, float) and not float(value).is_integer():
         return default
-    if isinstance(value, str):
-        # int("60") works but the reference only accepts integral providers;
-        # strings like "abc" already raised above. Accept numeric strings.
-        pass
     return size if size > 0 else default
 
 
@@ -203,6 +187,7 @@ def _config_from_mapping(entry: dict[str, Any], *, default_export: str = "local"
     exporter = ExporterConfig(
         export_type=entry.get("export_type", default_export),
         project_id=entry.get("project_id"),
+        path=entry.get("path"),
     )
     slide = entry.get("window_slide")
     gap = entry.get("session_gap")

@@ -65,17 +65,6 @@ def label_entries(
     return [(k, merged[k]) for k in sorted(merged)]
 
 
-def labels_expr(definition: MetricDefinition, resolve: FieldResolver) -> Column:
-    """MAP<STRING,STRING> of merged static+dynamic labels."""
-    entries = label_entries(definition, resolve)
-    if not entries:
-        return F.create_map().cast("map<string,string>")
-    pairs: list[Column] = []
-    for k, v in entries:
-        pairs.extend([F.lit(k), v])
-    return F.create_map(*pairs)
-
-
 LABEL_KEY_SEP = "\x01"
 
 

@@ -555,7 +555,7 @@ def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
     # match), so the gram build for candidate docs runs once with NO
     # materialization barrier; the per-side column renames move to the
     # join outputs.
-    # Round 13 probe note (lsh_stage_probe: verification is ~7 s of the
+    # Round 13 probe note (OPTIMIZATION_r13.md: verification is ~7 s of the
     # ~12-15 s sf1 wall): two cheaper set ENCODINGS were A/B'd
     # interleaved and REJECTED — (h1, h2) hash-pair STRUCT elements
     # measured 2x SLOWER than the gram strings (30 vs 15 s median:

@@ -850,8 +850,9 @@ def semdedup_prune_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio is PROTOCOL-INCLUSIVE (ADVICE r13): its "before" ran under
     the old no-per-query-GC driver loop, so it conflates the r13
     session-aging fix with the code change — read it as "what the old
-    driver would have reported", not as the code speedup. Stage split (sem_assign_probe + cumulative noop probes,
-    sf1): assignment ≈ 3.1 s, members collect_list ≈ +0.6 s, the
+    bench loop would have reported", not as the code speedup. Stage
+    split (OPTIMIZATION_r13.md, cumulative noop probes, sf1):
+    assignment ≈ 3.1 s, members collect_list ≈ +0.6 s, the
     within-cluster pair stage the remainder. Levers A/B'd and NOT
     shipped, with results: (a)
     spark.sql.objectHashAggregate.sortBased.fallbackThreshold — no

@@ -122,7 +122,7 @@ def pagerank_customer_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct read hashpartitioning(src) straight from the cache and
     # plan NO edge re-shuffle. localCheckpoint (the r13 shape) cannot
     # do this under AQE: its LogicalRDD comes back with unknown
-    # partitioning (measured, scripts/graph_iter_probe.py), which
+    # partitioning (measured, OPTIMIZATION_r14.md), which
     # re-exchanged the edge table EVERY iteration. The per-iteration
     # eager localCheckpoint barriers are gone too: N_ITER is a fixed
     # small constant, so the lazily-nested 5-iteration plan executes as

@@ -98,7 +98,7 @@ def label_prop_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14 (VERDICT r13 #1, §2.4/§5): ONE keyed exchange for the whole
     # query — edges repartition("src") + persist() (a cached plan keeps
     # its outputPartitioning; localCheckpoint under AQE does not —
-    # measured, scripts/graph_iter_probe.py), so every round's
+    # measured, OPTIMIZATION_r14.md), so every round's
     # join-on-src reads hashpartitioning(src) from the cache and only
     # the node-sized label table moves. The per-round eager
     # localCheckpoint barriers are gone (N_ITER is a fixed small

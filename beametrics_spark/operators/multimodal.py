@@ -654,33 +654,6 @@ def multimodal_image_patch_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def avi_media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synthesize REAL video containers: each doc_id becomes a
-    spec-correct RIFF/AVI with an idx1 index whose frame plan follows
-    the shared fixture formula (videocodec.fixture_frame_plan)."""
-    from beametrics_spark.operators.videocodec import encode_avi
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism, F.col("doc_id"))
-    )
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [encode_avi(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": ["video/avi"] * len(payloads),
-                    "payload": payloads,
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
-
-    return docs.mapInPandas(_encode, schema=MEDIA_SCHEMA)
-
-
 _AVI_INDEX_SCHEMA = (
     "doc_id long, n_frames long, n_keyframes long, total_frame_bytes long, "
     "max_frame_bytes long, max_key_gap long"

@@ -18,8 +18,9 @@ import shutil
 import tempfile
 import uuid
 from contextlib import contextmanager
+from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from beametrics_spark.config import FilterCondition, MetricConfig, MetricDefinition
@@ -91,6 +92,40 @@ _FAST_TMP = "/dev/shm" if os.path.isdir("/dev/shm") else None
 
 def _scratch(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=_FAST_TMP)
+
+
+def _write_chunks(
+    df: DataFrame, key: Column, stream_dir: str, keys: Sequence[int] = range(4)
+) -> None:
+    """Write ``df`` as one parquet file per chunk ``key`` value, named
+    ``{i:02d}.parquet`` in ``stream_dir`` in ``keys`` order with
+    increasing mtimes, so a maxFilesPerTrigger=1 file stream (which
+    reads oldest first) gets one chunk per trigger.
+
+    ONE partitionBy write builds every chunk (r14: it replaced one
+    filter+coalesce(1) job per chunk, each re-scanning the input). A key
+    with no rows gets an empty file of the same schema, so every chunk
+    still fires its trigger. In-file row order is not kept; callers
+    depend only on the chunk SETS.
+    """
+    tmp = os.path.join(stream_dir, "_build")
+    (
+        df.withColumn("_chunk", key)
+        .repartition(len(keys), "_chunk")
+        .write.partitionBy("_chunk")
+        .mode("overwrite")
+        .parquet(tmp)
+    )
+    for i, k in enumerate(keys):
+        d = os.path.join(tmp, f"_chunk={k}")
+        if not os.path.isdir(d):  # empty chunk
+            d = os.path.join(tmp, f"_empty_{k}")
+            df.filter(F.lit(False)).coalesce(1).write.parquet(d)
+        part = next(p for p in os.listdir(d) if p.endswith(".parquet"))
+        dst = os.path.join(stream_dir, f"{i:02d}.parquet")
+        os.replace(os.path.join(d, part), dst)
+        os.utime(dst, (1_000_000 + i, 1_000_000 + i))
+    shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _drain_to_table(
@@ -932,14 +967,10 @@ def stream_debounce_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stream_dir = tempfile.mkdtemp(prefix="beametrics_stream_deb_")
     try:
-        # four single-file chunks in event-time order with increasing
-        # mtimes (FileStreamSource processes oldest-first). r14 (§2.4
-        # fewer passes): ONE partitionBy write replaces four
-        # filter+coalesce(1) jobs that each re-scanned events — same
-        # day-boundary chunk SETS (the state fn sorts each batch into
-        # the (ts_us, event_id) total order, so in-file row order is
-        # irrelevant); measured 1.16 s -> 0.47 s for the chunk build
-        # at sf0.1.
+        # four chunks in event-time order, split on day boundaries (the
+        # state fn sorts each batch into the (ts_us, event_id) total
+        # order, so in-file row order is irrelevant); one partitionBy
+        # write measured 1.16 s -> 0.47 s for the chunk build at sf0.1.
         day = F.dayofmonth("ts")
         bucket = (
             F.when(day < 8, 0)
@@ -947,21 +978,7 @@ def stream_debounce_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             .when(day < 24, 2)
             .otherwise(3)
         )
-        tmp = os.path.join(stream_dir, "_build")
-        (
-            ev.withColumn("_chunk", bucket)
-            .repartition(4, "_chunk")
-            .write.partitionBy("_chunk")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
-        for i in range(4):
-            d = os.path.join(tmp, f"_chunk={i}")
-            part = next(p for p in os.listdir(d) if p.endswith(".parquet"))
-            dst = os.path.join(stream_dir, f"{i:02d}.parquet")
-            os.replace(os.path.join(d, part), dst)
-            os.utime(dst, (1_000_000 + i, 1_000_000 + i))
-        shutil.rmtree(tmp, ignore_errors=True)
+        _write_chunks(ev, bucket, stream_dir)
         schema = spark.read.parquet(stream_dir).schema
         stream = (
             spark.readStream.schema(schema)
@@ -1050,28 +1067,11 @@ def stream_weighted_sample_parity(spark: SparkSession, sf_dir: str) -> DataFrame
     try:
         hi = docs.agg(F.max("doc_id")).first()[0] + 1
         step = (hi + 3) // 4
-        # r14: ONE partitionBy write replaces four filter+coalesce(1)
-        # jobs re-scanning documents (same key-range chunk SETS; the
-        # reservoir merge is row-order-insensitive — its window is the
-        # (k DESC, doc_id) total order). Same move as
-        # stream_debounce_parity; measurement there.
-        tmp = os.path.join(stream_dir, "_build")
-        (
-            docs.withColumn(
-                "_chunk", F.floor(F.col("doc_id") / step).cast("int")
-            )
-            .repartition(4, "_chunk")
-            .write.partitionBy("_chunk")
-            .mode("overwrite")
-            .parquet(tmp)
+        # key-range chunks; the reservoir merge is row-order-insensitive
+        # (its window is the (k DESC, doc_id) total order)
+        _write_chunks(
+            docs, F.floor(F.col("doc_id") / step).cast("int"), stream_dir
         )
-        for i in range(4):
-            d = os.path.join(tmp, f"_chunk={i}")
-            part = next(p for p in os.listdir(d) if p.endswith(".parquet"))
-            dst = os.path.join(stream_dir, f"{i:02d}.parquet")
-            os.replace(os.path.join(d, part), dst)
-            os.utime(dst, (1_000_000 + i, 1_000_000 + i))
-        shutil.rmtree(tmp, ignore_errors=True)
 
         state_schema = "source string, doc_id long, weight long, k double"
         w = Window.partitionBy("source").orderBy(F.desc("k"), F.asc("doc_id"))
@@ -1456,44 +1456,14 @@ def stream_cdc_merge_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         # initial snapshot = the base table
         docs.write.mode("overwrite").parquet(base_dir)
-        # feed chopped into 4 key-range files, one per trigger. r14
-        # (§2.4 fewer passes): ONE partitionBy write replaces four
-        # filter+coalesce(1) jobs that each re-executed the whole feed
-        # subtree (docs scans + unions); chunk SETS are identical
-        # (floor(doc_id/step) == the old range predicates) and
-        # merge-into is row-order-insensitive. A missing partition dir
-        # (empty chunk) falls back to writing that chunk the old way,
-        # keeping the 4-trigger contract.
+        # feed chopped into 4 key-range files, one per trigger; chunk
+        # SETS equal the old range predicates and merge-into is
+        # row-order-insensitive
         hi = max_id + CDC_INSERTS + 1
         step = (hi + 3) // 4
-        tmp = os.path.join(stream_dir, "_build")
-        (
-            feed.withColumn(
-                "_chunk", F.floor(F.col("doc_id") / step).cast("int")
-            )
-            .repartition(4, "_chunk")
-            .write.partitionBy("_chunk")
-            .mode("overwrite")
-            .parquet(tmp)
+        _write_chunks(
+            feed, F.floor(F.col("doc_id") / step).cast("int"), stream_dir
         )
-        for i in range(4):
-            d = os.path.join(tmp, f"_chunk={i}")
-            dst = os.path.join(stream_dir, f"{i:02d}.parquet")
-            if os.path.isdir(d):
-                part = next(p for p in os.listdir(d) if p.endswith(".parquet"))
-                os.replace(os.path.join(d, part), dst)
-            else:  # empty chunk: still emit a file so trigger i fires
-                etmp = os.path.join(stream_dir, f"_build_empty_{i}")
-                feed.filter(F.lit(False)).coalesce(1).write.mode(
-                    "overwrite"
-                ).parquet(etmp)
-                part = next(
-                    p for p in os.listdir(etmp) if p.endswith(".parquet")
-                )
-                os.replace(os.path.join(etmp, part), dst)
-                shutil.rmtree(etmp, ignore_errors=True)
-            os.utime(dst, (1_000_000 + i, 1_000_000 + i))
-        shutil.rmtree(tmp, ignore_errors=True)
 
         state_schema = "doc_id long, source string, text string"
 
@@ -1598,29 +1568,12 @@ def stream_cdc_mor_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     log_dir = _scratch("beametrics_mor_log_")
     ckpt = _scratch("beametrics_mor_ckpt_")
     try:
-        # one feed file per log wave, one wave per trigger. r14: ONE
-        # write partitioned by seq replaces four filter+coalesce(1)
-        # jobs re-executing the shared log subtree (same wave SETS;
-        # last-writer-wins resolves on the seq column at read time, so
-        # in-file row order is irrelevant).
-        tmp = os.path.join(stream_dir, "_build")
-        (
-            # partition on a COPY of seq: partitionBy lifts its column
-            # into the directory key, and the feed rows must keep seq
-            # (read-side last-writer-wins resolves on it)
-            log.withColumn("_wave", F.col("seq"))
-            .repartition(4, "_wave")
-            .write.partitionBy("_wave")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
-        for i, s in enumerate((1, 2, 3, 4)):
-            d = os.path.join(tmp, f"_wave={s}")
-            part = next(p for p in os.listdir(d) if p.endswith(".parquet"))
-            dst = os.path.join(stream_dir, f"{i:02d}.parquet")
-            os.replace(os.path.join(d, part), dst)
-            os.utime(dst, (1_000_000 + i, 1_000_000 + i))
-        shutil.rmtree(tmp, ignore_errors=True)
+        # one feed file per log wave, one wave per trigger (same wave
+        # SETS; last-writer-wins resolves on the seq column at read
+        # time, so in-file row order is irrelevant). The chunk key is a
+        # COPY of seq: partitionBy lifts its column into the directory
+        # key, and the feed rows must keep seq.
+        _write_chunks(log, F.col("seq"), stream_dir, keys=(1, 2, 3, 4))
 
         def append_epoch(mb: DataFrame, _epoch_id: int) -> None:
             # the ENTIRE merge-on-read write path: append the delta,

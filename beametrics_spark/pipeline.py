@@ -122,11 +122,6 @@ def fan_out(
     src = df if pre is None else df.filter(pre)
     if len(configs) == 1:
         cfg = configs[0]
-        if pre is None and cfg.filter_conditions:
-            # single config below the match-all prefilter bar (unreachable
-            # today — one config with conditions makes pre non-None — but
-            # kept equivalent if prefilter policy ever loosens)
-            src = src.filter(compile_filter(cfg.filter_conditions, resolve))
         return src.select(
             F.col(ts_col).alias("ts"),
             F.lit(0).cast("int").alias("metric_id"),

@@ -39,10 +39,6 @@ def scan_count(df: DataFrame, fmt: str = "parquet") -> int:
     return executed_plan(df).count(f"FileScan {fmt}")
 
 
-def has_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in executed_plan(df)
-
-
 def uses_hash_aggregate(df: DataFrame) -> bool:
     plan = executed_plan(df)
     return "HashAggregate" in plan and "SortAggregate" not in plan

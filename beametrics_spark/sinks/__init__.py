@@ -1,9 +1,12 @@
 """Sink registry — where windowed metric points go.
 
 Mirrors the reference's exporter factory (metrics_exporter.py:124-156):
-a registry keyed by export-type string. The reference ships two sinks
-(Cloud Monitoring + stdout JSON); we ship those shapes plus the
-engine-native ones (console/memory/parquet/json).
+a registry keyed by export-type string. SINK_REGISTRY's keys are the
+only list of export types: config validation, the CLI and
+sinks_for_configs all read it. The reference ships two sinks (Cloud
+Monitoring + stdout JSON); we ship those shapes plus the engine-native
+ones (console, memory, parquet/json/csv/orc files, and an exactly-once
+epoch-partitioned parquet sink).
 
 Semantics preserved from the reference:
   - local/stdout sink emits one JSON object per aggregate:
@@ -23,13 +26,18 @@ Semantics preserved from the reference:
 
 from __future__ import annotations
 
+import inspect
 import json
 import sys
 import time
-from typing import Any, Callable, Iterator, Protocol
+from functools import partial
+from typing import TYPE_CHECKING, Any, Callable, Iterable, Iterator, Protocol
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
+
+if TYPE_CHECKING:
+    from beametrics_spark.config import MetricConfig
 
 
 class MetricsSink(Protocol):
@@ -77,29 +85,21 @@ class MemorySink:
         self.rows.extend(_rows_iter(batch_df))
 
 
-class ParquetSink:
-    def __init__(self, path: str, mode: str = "append") -> None:
+class FileSink:
+    """Appends each batch as files of one Spark format."""
+
+    def __init__(self, path: str, format: str, mode: str = "append") -> None:
         self.path = path
+        self.format = format
         self.mode = mode
 
     def write(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
-        batch_df.write.mode(self.mode).parquet(self.path)
+        batch_df.write.mode(self.mode).format(self.format).save(self.path)
 
 
-class JsonSink:
+class CsvSink(FileSink):
     def __init__(self, path: str, mode: str = "append") -> None:
-        self.path = path
-        self.mode = mode
-
-    def write(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
-        batch_df.write.mode(self.mode).json(self.path)
-
-
-class CsvSink:
-    def __init__(self, path: str, mode: str = "append", header: bool = True) -> None:
-        self.path = path
-        self.mode = mode
-        self.header = header
+        super().__init__(path, "csv", mode)
 
     def write(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
         # MAP columns are not CSV-encodable: render labels as JSON text
@@ -107,18 +107,9 @@ class CsvSink:
             F.to_json(F.col(name)).alias(name) if dtype.startswith("map") else F.col(name)
             for name, dtype in batch_df.dtypes
         ]
-        batch_df.select(*cols).write.mode(self.mode).option(
-            "header", str(self.header).lower()
-        ).csv(self.path)
-
-
-class OrcSink:
-    def __init__(self, path: str, mode: str = "append") -> None:
-        self.path = path
-        self.mode = mode
-
-    def write(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
-        batch_df.write.mode(self.mode).orc(self.path)
+        batch_df.select(*cols).write.mode(self.mode).option("header", "true").csv(
+            self.path
+        )
 
 
 def minute_aligned_interval(now: float | None = None) -> tuple[int, int]:
@@ -162,33 +153,33 @@ def build_time_series_request(
     }
 
 
-class GoogleCloudMonitoringSink:
-    """At-least-once push to Cloud Monitoring.
+def point_exporter(
+    project_id: str, client_factory: Callable[[], Any] | None
+) -> Callable[[Iterable[Row]], None]:
+    """The per-point Cloud Monitoring export both monitoring sinks share.
 
-    ``client_factory`` is injected (the real google-cloud-monitoring
-    package is not in this environment). InvalidArgument-shaped errors
-    are swallowed like the reference (metrics_exporter.py:116-121);
-    everything else propagates.
+    Raises NotImplementedError at once when no client can be made (the
+    real google-cloud-monitoring package is not in this environment).
+    The returned function builds one client on its first row (the
+    DoFn.setup analog), pushes one request per aggregate row, and
+    swallows InvalidArgument-shaped errors like the reference
+    (metrics_exporter.py:116-121); everything else propagates. It ships
+    to executors when ``client_factory`` is picklable.
     """
+    if client_factory is None:
+        raise NotImplementedError(
+            "google-cloud-monitoring client not available in this "
+            "environment; inject client_factory"
+        )
 
-    def __init__(
-        self,
-        project_id: str,
-        client_factory: Callable[[], Any] | None = None,
-    ) -> None:
-        self.project_id = project_id
-        self.client_factory = client_factory
-
-    def write(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
-        if self.client_factory is None:
-            raise NotImplementedError(
-                "google-cloud-monitoring client not available in this "
-                "environment; inject client_factory"
-            )
-        client = self.client_factory()  # once per batch, like DoFn.setup
-        for rec in _rows_iter(batch_df):
+    def export(rows: Iterable[Row]) -> None:
+        client = None
+        for row in rows:
+            if client is None:
+                client = client_factory()
+            rec = row.asDict(recursive=True)
             req = build_time_series_request(
-                project_id=self.project_id,
+                project_id=project_id,
                 metric_name=rec.get("metric_name", ""),
                 value=float(rec.get("value", 0.0)),
                 static_labels=rec.get("labels") or {},
@@ -200,24 +191,15 @@ class GoogleCloudMonitoringSink:
                     continue  # swallowed, reference metrics_exporter.py:116-119
                 raise
 
+    return export
 
-class GoogleCloudMonitoringPartitionedSink:
-    """Executor-side variant of GoogleCloudMonitoringSink: writes via
-    ``batch_df.foreachPartition`` with ONE client per non-empty
-    partition — the exact analog of the reference's per-bundle client
-    in ``DoFn.setup`` (pipeline.py:218-223, metrics_exporter.py:164-165).
 
-    The driver-side sink above iterates aggregates through
-    ``toLocalIterator`` — fine at windowed-aggregate cardinality, but at
-    extreme label cardinality every point serializes through the
-    driver. Here rows never leave the executors: each partition builds
-    its requests and pushes them with a locally-constructed client, so
-    export bandwidth scales with the cluster. Same at-least-once /
-    swallow-InvalidArgument semantics as the reference
-    (metrics_exporter.py:116-121).
+class GoogleCloudMonitoringSink:
+    """At-least-once push to Cloud Monitoring from the driver: aggregates
+    arrive through ``toLocalIterator`` and one client serves the batch.
 
-    ``client_factory`` must be picklable (it ships to executors); it is
-    called lazily so empty partitions construct no client.
+    ``client_factory`` is injected (the real google-cloud-monitoring
+    package is not in this environment).
     """
 
     def __init__(
@@ -229,34 +211,28 @@ class GoogleCloudMonitoringPartitionedSink:
         self.client_factory = client_factory
 
     def write(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
-        if self.client_factory is None:
-            raise NotImplementedError(
-                "google-cloud-monitoring client not available in this "
-                "environment; inject client_factory"
-            )
-        project_id = self.project_id
-        factory = self.client_factory
+        export = point_exporter(self.project_id, self.client_factory)
+        export(batch_df.toLocalIterator())
 
-        def _write_partition(rows: Iterator[Any]) -> None:
-            client = None
-            for row in rows:
-                if client is None:  # once per non-empty partition (DoFn.setup)
-                    client = factory()
-                rec = row.asDict(recursive=True)
-                req = build_time_series_request(
-                    project_id=project_id,
-                    metric_name=rec.get("metric_name", ""),
-                    value=float(rec.get("value", 0.0)),
-                    static_labels=rec.get("labels") or {},
-                )
-                try:
-                    client.create_time_series(req)
-                except Exception as exc:  # noqa: BLE001
-                    if "InvalidArgument" in type(exc).__name__:
-                        continue  # swallowed, reference metrics_exporter.py:116-119
-                    raise
 
-        batch_df.foreachPartition(_write_partition)
+class GoogleCloudMonitoringPartitionedSink(GoogleCloudMonitoringSink):
+    """Executor-side variant of GoogleCloudMonitoringSink: writes via
+    ``batch_df.foreachPartition`` with ONE client per non-empty
+    partition — the exact analog of the reference's per-bundle client
+    in ``DoFn.setup`` (pipeline.py:218-223, metrics_exporter.py:164-165).
+
+    The driver-side sink serializes every point through the driver —
+    fine at windowed-aggregate cardinality, but not at extreme label
+    cardinality. Here rows never leave the executors, so export
+    bandwidth scales with the cluster.
+
+    ``client_factory`` must be picklable (it ships to executors).
+    """
+
+    def write(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
+        batch_df.foreachPartition(
+            point_exporter(self.project_id, self.client_factory)
+        )
 
 
 class IdempotentParquetSink:
@@ -280,24 +256,47 @@ SINK_REGISTRY: dict[str, Callable[..., MetricsSink]] = {
     "local": LocalSink,
     "console": ConsoleSink,
     "memory": MemorySink,
-    "parquet": ParquetSink,
-    "json": JsonSink,
+    "parquet": partial(FileSink, format="parquet"),
+    "json": partial(FileSink, format="json"),
     "csv": CsvSink,
-    "orc": OrcSink,
+    "orc": partial(FileSink, format="orc"),
     "idempotent-parquet": IdempotentParquetSink,
     "google-cloud-monitoring": GoogleCloudMonitoringSink,
     "google-cloud-monitoring-executor": GoogleCloudMonitoringPartitionedSink,
 }
 
 
+def _sink_factory(export_type: str) -> Callable[..., MetricsSink]:
+    try:
+        return SINK_REGISTRY[export_type]
+    except KeyError:
+        raise ValueError(f"Unsupported export type: {export_type}") from None
+
+
 def create_sink(export_type: str, **kwargs) -> MetricsSink:
     """Factory dispatch; unknown type raises (reference
     metrics_exporter.py:149-156)."""
-    try:
-        cls = SINK_REGISTRY[export_type]
-    except KeyError:
-        raise ValueError(f"Unsupported export type: {export_type}") from None
-    return cls(**kwargs)
+    return _sink_factory(export_type)(**kwargs)
+
+
+def sinks_for_configs(configs: list[MetricConfig]) -> dict[int, MetricsSink]:
+    """One sink per config, keyed by metric_id (the config's position).
+
+    Each sink gets the exporter settings its constructor asks for:
+    ``project_id`` for the monitoring sinks, ``path`` for the file sinks
+    (default ``/tmp/beametrics_out_{metric_id}``).
+    """
+    sinks: dict[int, MetricsSink] = {}
+    for i, cfg in enumerate(configs):
+        exporter = cfg.exporter
+        factory = _sink_factory(exporter.export_type)
+        settings = {
+            "project_id": exporter.project_id or "",
+            "path": exporter.path or f"/tmp/beametrics_out_{i}",
+        }
+        wanted = inspect.signature(factory).parameters
+        sinks[i] = factory(**{k: v for k, v in settings.items() if k in wanted})
+    return sinks
 
 
 def route_by_metric(

@@ -1,10 +1,12 @@
 """Cloud Monitoring client adapter — the drop-in seam for the real SDK.
 
-The engine's GoogleCloudMonitoringSink (sinks/__init__.py:138) takes an
-injected ``client_factory``; anything with a ``create_time_series(req)``
-method satisfies the contract, where ``req`` is the plain-dict request
-built by build_time_series_request (field-for-field the reference's
-GoogleCloudMetricsExporter.export shape, metrics_exporter.py:80-109).
+The engine's two monitoring sinks (GoogleCloudMonitoringSink and its
+executor-side twin, both exporting through ``sinks.point_exporter``)
+take an injected ``client_factory``; anything with a
+``create_time_series(req)`` method satisfies the contract, where ``req``
+is the plain-dict request built by build_time_series_request
+(field-for-field the reference's GoogleCloudMetricsExporter.export
+shape, metrics_exporter.py:80-109).
 
 This module shows both ends of that seam:
 

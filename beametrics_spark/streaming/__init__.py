@@ -10,16 +10,14 @@ Decode semantics (reference pipeline.py:82-108): try utf-8, shift-jis,
 euc-jp, iso-2022-jp in that order; a JSON parse error after a successful
 decode, or total decode failure, DROPS the message (returns []). The
 multi-encoding fallback needs Python — implemented as an Arrow-batched
-Pandas UDF, NOT a per-row UDF. When payloads are known UTF-8 (the
-idiomatic default), `decode_utf8_json` keeps everything JVM-side.
+Pandas UDF, NOT a per-row UDF; with ``multi_encoding=False`` (payloads
+known to be UTF-8) decoding stays JVM-side.
 """
 
 from __future__ import annotations
 
 import contextlib
 import json
-import os
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -40,25 +38,17 @@ DEFAULT_WATERMARK = "30 seconds"
 # batch shuffle, the metrics state shuffle carries only POST-partial-agg
 # rows — its size tracks key cardinality (windows × label sets), not
 # input volume — so a small count stays right even at 100 TB input.
-# Raise via env for genuinely high-cardinality label spaces.
-STREAM_STATE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
-)
+STREAM_STATE_PARTITIONS = 8
 
 
 @contextlib.contextmanager
-def scoped_state_partitions(
-    spark: SparkSession, n: int | None = STREAM_STATE_PARTITIONS
-):
+def scoped_state_partitions(spark: SparkSession):
     """Temporarily set spark.sql.shuffle.partitions around a streaming
     query's .start() — the conf is captured into the checkpoint at first
     start, so only the stream is affected; batch plans see the restored
     value."""
-    if n is None:
-        yield
-        return
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
     try:
         yield
     finally:
@@ -92,15 +82,6 @@ def decode_multi_encoding(payload: pd.Series) -> pd.Series:
         return None
 
     return payload.map(_decode)
-
-
-def decode_utf8_json(df: DataFrame, value_col: str = "value") -> DataFrame:
-    """JVM-side fast path: strict-UTF-8 decode; malformed ⇒ null ⇒ dropped."""
-    text = F.col(value_col).cast("string")
-    valid = F.get_json_object(text, "$") .isNotNull()
-    return df.withColumn("_json", F.when(valid, text)).filter(
-        F.col("_json").isNotNull()
-    )
 
 
 def parse_events(
@@ -144,7 +125,6 @@ def run_metrics_stream(
     output_mode: str = "update",
     trigger: dict | None = None,
     query_name: str = "beametrics",
-    state_partitions: int | None = STREAM_STATE_PARTITIONS,
     salt_buckets: int | None = None,
 ):
     """Start the streaming query; returns the StreamingQuery handle.
@@ -175,5 +155,5 @@ def run_metrics_stream(
         writer = writer.option("checkpointLocation", checkpoint_dir)
     if trigger:
         writer = writer.trigger(**trigger)
-    with scoped_state_partitions(events.sparkSession, state_partitions):
+    with scoped_state_partitions(events.sparkSession):
         return writer.start()

@@ -80,10 +80,8 @@ BENCH_QUERIES = [
     "value_clip_rates",
     # round-4 wave 2: statistical quality scoring, embedding diagnostics,
     # event analytics, corpus statistics, audio decode.
-    # pagerank_customer_supplier is excluded: 5 power iterations each pay
-    # the local job-scheduling floor (localCheckpoint per round) — a
-    # local-mode artifact that misstates the per-iteration join+agg cost a
-    # cluster would see; its correctness is oracle-gated instead.
+    # pagerank_customer_supplier is not listed here: it is timed per
+    # iteration in ITERATIVE_QUERIES below.
     # knn_graph_hub_stats is excluded like IVF: it is a guarded O(n²)
     # diagnostic (exact edges over a bounded sample) — timing the
     # quadratic baseline at sf0.1 measures the guard's ceiling, not an
@@ -231,13 +229,14 @@ STREAMING_QUERIES = [
 ]
 
 # Iterative workloads, timed with an iteration-normalized metric
-# (sec/iteration): each power/propagation round pays the local
-# job-scheduling floor once (localCheckpoint per round), so raw wall
-# time on local[32] overstates what a cluster pays per round — but the
-# per-round join+agg cost IS the number that extrapolates, so it is
-# measured rather than excluded (r04 verdict item 4). Construction is
-# INSIDE the timer: these operators execute their rounds eagerly while
-# the DataFrame is being built.
+# (sec/iteration): the per-round join+agg cost is the number that
+# extrapolates, so it is measured rather than excluded (r04 verdict
+# item 4). Since r14 pagerank and label propagation run their fixed
+# rounds as one lazily nested plan over a persisted keyed edge table;
+# kcore still materializes each round's keep set with an eager
+# localCheckpoint. Construction is INSIDE the timer: these operators run jobs
+# (edge-cache build and node count, kcore's rounds) while the
+# DataFrame is being built.
 ITERATIVE_QUERIES = [
     "kcore_trade_graph",
     "label_prop_communities",
@@ -455,7 +454,7 @@ def main() -> int:
     # full_count=0 — no exhaustion on this box).
     #
     # Why every query and not every 25 (the first r13 cadence): measured
-    # with scripts/ab_interleave_probe.py (sf1 replica, the SAME plan
+    # (OPTIMIZATION_r13.md; sf1 replica, the SAME plan
     # re-executed round over round in one session), a no-GC session
     # degraded MONOTONICALLY — ~12 s -> 29 s -> 76 s by round 5 on a
     # ~6 s query — while the per-round-gc session held 5.7-7.4 s flat

@@ -66,3 +66,16 @@ def test_cli_unknown_query_errors():
 
     with pytest.raises(SystemExit, match="unknown query"):
         main(["--query", "no_such_query"])
+
+
+def test_salt_buckets_needs_batch():
+    """--salt-buckets only drives the batch pipeline, so a streaming run
+    rejects it instead of dropping it silently."""
+    import pytest
+
+    from beametrics_spark.cli import build_parser, validate_args
+
+    argv = ["--metric-name", "m", "--salt-buckets", "4"]
+    with pytest.raises(ValueError, match="--salt-buckets"):
+        validate_args(build_parser().parse_args(argv))
+    validate_args(build_parser().parse_args(argv + ["--batch"]))

@@ -8,15 +8,23 @@ import json
 import pytest
 
 from beametrics_spark.sinks import (
+    SINK_REGISTRY,
     GoogleCloudMonitoringSink,
     LocalSink,
     MemorySink,
-    ParquetSink,
     build_time_series_request,
     create_sink,
     minute_aligned_interval,
     route_by_metric,
+    sinks_for_configs,
 )
+
+FILE_FORMATS = ["parquet", "json", "csv", "orc"]
+
+
+def _read_back(spark, fmt, path):
+    reader = spark.read.option("header", "true") if fmt == "csv" else spark.read
+    return reader.format(fmt).load(path)
 
 
 def _points_df(spark):
@@ -118,10 +126,11 @@ def test_monitoring_sink_without_client_raises(spark):
         GoogleCloudMonitoringSink("proj").write(_points_df(spark))
 
 
-def test_parquet_sink_roundtrip(spark, tmp_path):
+@pytest.mark.parametrize("fmt", FILE_FORMATS)
+def test_file_sink_roundtrip(spark, tmp_path, fmt):
     path = str(tmp_path / "out")
-    ParquetSink(path).write(_points_df(spark))
-    back = spark.read.parquet(path)
+    create_sink(fmt, path=path).write(_points_df(spark))
+    back = _read_back(spark, fmt, path)
     assert back.count() == 2
     assert {r["metric_name"] for r in back.collect()} == {"error_count", "bytes_sum"}
 
@@ -236,26 +245,76 @@ def test_partitioned_monitoring_sink_without_client_raises(spark):
         GoogleCloudMonitoringPartitionedSink("p").write(df)
 
 
-def test_csv_and_orc_sinks_roundtrip(spark, tmp_path):
-    """CSV (with MAP labels rendered as JSON text) and ORC sinks write
-    batches a reader can load back."""
-    from beametrics_spark.sinks import create_sink
-
+@pytest.mark.parametrize("fmt", FILE_FORMATS)
+def test_file_sink_labels_roundtrip(spark, tmp_path, fmt):
+    """Every file sink writes batches a reader can load back with the
+    labels intact: a map in parquet/orc, an object in json, and JSON
+    text in csv (MAP columns are not CSV-encodable)."""
     df = spark.range(5).selectExpr(
         "'m' AS metric_name",
         "CAST(id AS DOUBLE) AS value",
         "map('k', CAST(id AS STRING)) AS labels",
     )
-    csv_path = str(tmp_path / "csv_out")
-    orc_path = str(tmp_path / "orc_out")
-    create_sink("csv", path=csv_path).write(df)
-    create_sink("orc", path=orc_path).write(df)
+    path = str(tmp_path / f"{fmt}_out")
+    create_sink(fmt, path=path).write(df)
 
-    back_csv = spark.read.option("header", "true").csv(csv_path)
-    assert back_csv.count() == 5
-    assert set(back_csv.columns) == {"metric_name", "value", "labels"}
-    assert back_csv.filter("labels LIKE '{\"k\":%'").count() == 5
+    back = _read_back(spark, fmt, path)
+    assert back.count() == 5
+    assert set(back.columns) == {"metric_name", "value", "labels"}
+    label_type = dict(back.dtypes)["labels"]
+    if fmt == "csv":
+        assert back.filter("labels LIKE '{\"k\":%'").count() == 5
+    elif fmt == "json":
+        assert label_type == "struct<k:string>"
+    else:
+        assert label_type.startswith("map")
+    labels = back.filter("CAST(value AS DOUBLE) = 3").first()["labels"]
+    if fmt == "csv":
+        labels = json.loads(labels)
+    assert labels["k"] == "3"
 
-    back_orc = spark.read.orc(orc_path)
-    assert back_orc.count() == 5
-    assert dict(back_orc.dtypes)["labels"].startswith("map")
+
+def test_registry_keys_are_the_export_types():
+    """SINK_REGISTRY's keys are the one list of export types: each one
+    passes both ExporterConfig and the CLI check, and an unknown type
+    fails both."""
+    from beametrics_spark.cli import build_parser, validate_args
+    from beametrics_spark.config import ExporterConfig
+
+    for export_type in SINK_REGISTRY:
+        ExporterConfig(export_type=export_type)
+        validate_args(build_parser().parse_args(["--export-type", export_type]))
+    with pytest.raises(ValueError, match="Unsupported export type"):
+        ExporterConfig(export_type="bogus")
+    with pytest.raises(ValueError, match="Unsupported export type"):
+        validate_args(build_parser().parse_args(["--export-type", "bogus"]))
+
+
+def test_yaml_path_reaches_file_sink(tmp_path):
+    """A YAML ``path:`` picks where a file sink writes; without one the
+    sink falls back to the per-metric default."""
+    from beametrics_spark.config import MEMORY_CONFIGS, load_metric_configs
+    from beametrics_spark.sinks import FileSink
+
+    out = str(tmp_path / "errors")
+    MEMORY_CONFIGS["sink_paths.yaml"] = f"""
+metrics:
+  - name: error_count
+    export_type: orc
+    path: {out}
+  - name: all_count
+    export_type: json
+  - name: pushed
+    export_type: google-cloud-monitoring
+    project_id: proj
+"""
+    try:
+        configs = load_metric_configs(config_path="memory://sink_paths.yaml")
+    finally:
+        del MEMORY_CONFIGS["sink_paths.yaml"]
+    sinks = sinks_for_configs(configs)
+    assert isinstance(sinks[0], FileSink)
+    assert (sinks[0].path, sinks[0].format) == (out, "orc")
+    assert (sinks[1].path, sinks[1].format) == ("/tmp/beametrics_out_1", "json")
+    assert isinstance(sinks[2], GoogleCloudMonitoringSink)
+    assert sinks[2].project_id == "proj"

@@ -548,3 +548,24 @@ def test_streaming_salted_requires_watermark_and_append(spark, tmp_path):
     fanned = fan_out(stream_df, [cfg], resolve=schema_resolver(stream_df))
     with pytest.raises(ValueError, match="watermark"):
         aggregate_windows(fanned, [cfg], window_size=60, salt_buckets=8)
+
+
+def test_write_chunks_keeps_empty_chunks(spark, tmp_path):
+    """The chunked stream-feed writer emits one file per chunk key even
+    when a chunk has no rows, so a maxFilesPerTrigger=1 stream still
+    fires one trigger per chunk; rows land in their own chunk file."""
+    import os
+
+    from beametrics_spark.operators.stream_parity import _write_chunks
+
+    df = spark.range(30).selectExpr("id AS doc_id", "CAST(id AS STRING) AS s")
+    # ids 0..29 over 10-wide buckets: chunk 3 (ids 30..39) is empty
+    _write_chunks(df, (F.col("doc_id") / 10).cast("int"), str(tmp_path))
+
+    files = sorted(os.listdir(tmp_path))
+    assert files == ["00.parquet", "01.parquet", "02.parquet", "03.parquet"]
+    mtimes = [os.path.getmtime(tmp_path / f) for f in files]
+    assert mtimes == sorted(mtimes)
+    counts = [spark.read.parquet(str(tmp_path / f)).count() for f in files]
+    assert counts == [10, 10, 10, 0]
+    assert spark.read.parquet(str(tmp_path / "03.parquet")).columns == ["doc_id", "s"]
